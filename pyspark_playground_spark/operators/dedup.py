@@ -26,7 +26,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyspark_playground_spark.operators.text import tokens_expr
+from pyspark_playground_spark.operators.text import (
+    _bind,
+    _ngrams_from_tokens,
+    tokens_expr,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -127,13 +131,19 @@ def cross_split_gram_leakage(
 # ---------------------------------------------------------------------------
 
 def shingles_expr(text: str | Column, n: int = 3) -> Column:
-    """Distinct token n-gram shingles of a document."""
-    toks = tokens_expr(text)
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    grams = F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))
+    """Distinct token n-gram shingles of a document (``ngrams_expr``
+    grams, first occurrences in order); a token-less or NULL document
+    yields ``['']``, so it still gets a signature.
+
+    Same expression shape as ``ngrams_expr``: the document is tokenized
+    once and bound, and no lambda captures an outer expression.
+    """
+    return _bind(
+        tokens_expr(text),
+        lambda t: F.when(
+            F.size(t) > 0, F.array_distinct(_ngrams_from_tokens(t, n))
+        ).otherwise(F.array(F.lit(""))),
     )
-    return F.array_distinct(grams)
 
 
 def _materialize(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
@@ -1192,14 +1202,18 @@ def token_chunk_dedup(
     one row per distinct chunk, so memory is bounded by distinct-chunk
     count per partition, never by document size.
     """
-    toks = F.split(F.col(text_column), " ")
-    n_chunks = F.ceil(F.size(toks) / F.lit(chunk_tokens)).cast("int")
-    chunks = F.when(F.size(toks) > 0, F.transform(
-        F.sequence(F.lit(0), n_chunks - 1),
-        lambda i: F.concat_ws(
-            " ", F.slice(toks, i * chunk_tokens + 1, chunk_tokens)
-        ),
-    )).otherwise(F.array().cast("array<string>"))
+    def _chunks(toks: Column) -> Column:
+        n_chunks = F.ceil(F.size(toks) / F.lit(chunk_tokens)).cast("int")
+        return F.when(F.size(toks) > 0, F.transform(
+            F.sequence(F.lit(0), n_chunks - 1),
+            lambda i: F.concat_ws(
+                " ", F.slice(toks, i * chunk_tokens + 1, chunk_tokens)
+            ),
+        )).otherwise(F.array().cast("array<string>"))
+
+    # the split is bound once (``toks`` is a lambda variable), so the
+    # per-chunk slices read it instead of re-splitting the document
+    chunks = _bind(F.split(F.col(text_column), " "), _chunks)
     segs = df.select(
         F.col(id_column),
         F.posexplode_outer(chunks).alias("pos", "seg"),

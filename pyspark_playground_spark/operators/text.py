@@ -9,6 +9,8 @@ single codegen'd stage over the parquet scan with full column pruning.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -49,31 +51,39 @@ def token_count_expr(text: str | Column) -> Column:
     return F.size(tokens_expr(text))
 
 
+def _bind(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row — the Column-
+    level form of binding a helper column in a projection. A higher-order
+    function evaluates its array argument once, and ``body`` sees only the
+    bound lambda variable, never the outer expression."""
+    return F.transform(F.array(value), body)[0]
+
+
+def _ngrams_from_tokens(toks: Column, n: int) -> Column:
+    """Token n-grams of an already-evaluated token array (a bound column or
+    lambda variable; a tokenizing expression would re-run per reference).
+    Gram i joins element i of n shifted slices, zipped by ``arrays_zip``
+    (fields named "0".."n-1"): O(tokens), and the lambda reads only its
+    struct. Zip pads short slices with NULL, which ``concat_ws`` skips, so
+    fewer than n tokens yield one gram of them all; [] yields []."""
+    width = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))
+    shifted = F.arrays_zip(*[F.slice(toks, j + 1, width) for j in range(n)])
+    return F.transform(
+        shifted, lambda z: F.concat_ws(" ", *[z[str(j)] for j in range(n)])
+    )
+
+
 def ngrams_expr(text: str | Column, n: int = 2) -> Column:
     """Token n-grams (non-distinct, in order; a short document yields its
-    full token run as one gram).
+    full token run as one gram, a token-less one no grams, NULL text NULL).
 
-    For the common ``n == 2`` the grams come from ``zip_with`` over the
-    token array and its shifted self — zip_with *arguments* are evaluated
-    once per expression evaluation, unlike expressions captured inside a
-    lambda, which re-evaluate per element (the projection-collapse trap:
-    a captured ``split`` re-tokenizes the document per gram, measured ~20×
-    slower on the fixture corpus).
+    Expression-shape rule: no outer expression is captured in a lambda —
+    a captured ``split`` re-tokenizes the document per element, O(tokens²)
+    per row. The document is tokenized once and bound (``_bind``); the
+    grams come from ``_ngrams_from_tokens`` over that bound array. Callers
+    that reuse the tokens or grams bind them as helper columns instead.
     """
-    toks = tokens_expr(text)
-    n_tokens = F.size(toks)
-    if n == 2:
-        paired = F.zip_with(
-            toks,
-            F.slice(toks, 2, F.greatest(n_tokens - 1, F.lit(1))),
-            lambda a, b: F.when(b.isNotNull(), F.concat_ws(" ", a, b)).otherwise(a),
-        )
-        return F.slice(paired, 1, F.greatest(n_tokens - 1, F.lit(1)))
-    idx = F.sequence(F.lit(0), F.greatest(n_tokens - n, F.lit(0)))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    # A token-less document yields no grams (not [''], which sequence(0,0)
-    # over an empty token array would otherwise produce).
-    return F.when(n_tokens == 0, F.array().cast("array<string>")).otherwise(grams)
+    return _bind(tokens_expr(text), lambda t: _ngrams_from_tokens(t, n))
 
 
 def top_ngrams(
@@ -101,20 +111,16 @@ def quality_features(df: DataFrame, text_column: str = "text") -> DataFrame:
     """Length / punctuation / stopword quality signals per document.
 
     Ratios are computed as double divisions of exact integer counts, so
-    values are reproducible bit-for-bit across engines.
+    values are reproducible bit-for-bit across engines. The token array is
+    bound once as a helper column (see ``repetition_metrics``).
     """
-    toks = tokens_expr(text_column)
+    bound = df.select("*", tokens_expr(text_column).alias("__toks"))
+    toks = F.col("__toks")
     n_chars = F.length(F.col(text_column))
     n_tokens = F.size(toks)
     n_punct = F.length(F.regexp_replace(F.col(text_column), r"[\w\s]", ""))
-    stop_list = ",".join(f"'{w}'" for w in STOPWORDS_EN)
-    n_stop = F.size(
-        F.expr(
-            f"filter(split(trim(lower({text_column})), '\\\\s+'),"
-            f" x -> x in ({stop_list}))"
-        )
-    )
-    return df.select(
+    n_stop = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS_EN)))
+    return bound.select(
         "*",
         n_chars.alias("n_chars_text"),
         n_tokens.alias("n_tokens"),
@@ -123,7 +129,7 @@ def quality_features(df: DataFrame, text_column: str = "text") -> DataFrame:
         (n_punct.cast("double") / n_chars.cast("double")).alias("punct_ratio"),
         (n_stop.cast("double") / n_tokens.cast("double")).alias("stopword_ratio"),
         (n_chars.cast("double") / n_tokens.cast("double")).alias("avg_token_len"),
-    )
+    ).drop("__toks")
 
 
 def quality_score(df: DataFrame, text_column: str = "text") -> DataFrame:
@@ -287,20 +293,32 @@ def repetition_metrics(
     within one document's line/gram lists, bounded by document size — the
     right trade at 100 TB, where a shuffle per metric would dominate.
     """
-    # Expression-shape rule applied throughout (see SNIPPETS/memory:
-    # projection-collapse): higher-order functions are interpreted, not
-    # codegen'd, and every *capture* of an outer expression inside a lambda
-    # re-evaluates it per element. So (a) lambdas below only touch their
-    # bound variables, (b) occurrence counting is done as run lengths over
-    # a sorted array (one aggregate, one pass) instead of
-    # count-each-element-in-array (O(n) re-evaluations). The naive
-    # transform(distinct, g -> count(grams, g)) form measured ~20× slower
-    # on the fixture corpus.
+    # Expression-shape rule applied throughout: higher-order functions are
+    # interpreted, not codegen'd, and every *capture* of an outer
+    # expression inside a lambda re-evaluates it per element. So (a)
+    # lambdas below only touch their bound variables, (b) occurrence
+    # counting is done as run lengths over a sorted array (one aggregate,
+    # one pass) instead of count-each-element-in-array (O(n)
+    # re-evaluations; the naive transform(distinct, g -> count(grams, g))
+    # form measured ~20× slower on the fixture corpus), and (c) the line,
+    # token and gram arrays, each reused by several metrics, are bound once
+    # as helper columns. Reusing a Python Column copies its expression tree
+    # with fresh lambda-variable ids, which subexpression elimination
+    # cannot merge; a helper column referenced more than once is not
+    # re-inlined by CollapseProject.
     col = F.col(text_column)
-    lines = F.filter(
-        F.transform(F.split(col, "\n"), lambda x: F.trim(x)),
-        lambda x: x != F.lit(""),
+    bound = df.select(
+        "*",
+        F.filter(
+            F.transform(F.split(col, "\n"), lambda x: F.trim(x)),
+            lambda x: x != F.lit(""),
+        ).alias("__lines"),
+        tokens_expr(text_column).alias("__toks"),
     )
+    bound = bound.select(
+        "*", _ngrams_from_tokens(F.col("__toks"), ngram_n).alias("__grams")
+    )
+    lines, toks, grams = F.col("__lines"), F.col("__toks"), F.col("__grams")
     n_lines = F.size(lines)
     dup_lines = n_lines - F.size(F.array_distinct(lines))
     line_chars = F.aggregate(
@@ -331,9 +349,7 @@ def repetition_metrics(
         ),
         lambda acc: acc["chars"],
     )
-    toks = tokens_expr(text_column)
     n_tokens = F.size(toks)
-    grams = ngrams_expr(text_column, ngram_n)
     n_grams = F.size(grams)
     distinct_grams = F.array_distinct(grams)
     # top occurrence count = max run length over the sorted gram array
@@ -357,7 +373,7 @@ def repetition_metrics(
     safe = lambda num, den: F.when(  # noqa: E731
         den > 0, num.cast("double") / den.cast("double")
     ).otherwise(F.lit(0.0))
-    return df.select(
+    return bound.select(
         "*",
         n_lines.alias("n_lines"),
         safe(dup_lines, n_lines).alias("duplicate_line_fraction"),
@@ -368,7 +384,7 @@ def repetition_metrics(
         F.least(safe(top_count * ngram_n, n_tokens), F.lit(1.0)).alias(
             "top_ngram_fraction"
         ),
-    )
+    ).drop("__lines", "__toks", "__grams")
 
 
 def fingerprint(df: DataFrame, text_column: str = "text") -> DataFrame:
@@ -682,9 +698,11 @@ def c4_style_filter(
     - ``keep``            — conjunction of all of the above.
 
     Adds the flag columns to every input row (filtering is the caller's
-    one-line ``.where("keep")`` so rejected rows remain inspectable).
+    one-line ``.where("keep")`` so rejected rows remain inspectable). The
+    token array is bound once as a helper column (see
+    ``repetition_metrics``).
     """
-    toks = tokens_expr(text_column)
+    toks = F.col("__toks")
     n_tokens = F.size(toks)
     nonspace = F.length(F.regexp_replace(F.col(text_column), r"\s+", ""))
     mean_len = nonspace.cast("double") / n_tokens.cast("double")
@@ -697,7 +715,8 @@ def c4_style_filter(
         toks, F.array(*[F.lit(w) for w in STOPWORDS_EN])
     )
     out = (
-        df.withColumn("n_tokens", n_tokens)
+        df.withColumn("__toks", tokens_expr(text_column))
+        .withColumn("n_tokens", n_tokens)
         .withColumn("has_min_tokens", n_tokens >= min_tokens)
         .withColumn(
             "token_len_ok",
@@ -711,7 +730,7 @@ def c4_style_filter(
         "keep",
         F.col("has_min_tokens") & F.col("token_len_ok") & F.col("no_braces")
         & F.col("no_blocklist") & F.col("has_stopword"),
-    )
+    ).drop("__toks")
 
 
 def bpe_pair_counts(

@@ -25,6 +25,15 @@ def pytest_configure(config):
         config.option.basetemp = tempfile.mkdtemp(
             prefix="pytest-tmp-", dir="/dev/shm"
         )
+        config._shm_basetemp = config.option.basetemp
+
+
+def pytest_unconfigure(config):
+    # remove the tmpfs base dir made above, and only that one: a
+    # --basetemp given on the command line is the caller's to keep
+    shm = getattr(config, "_shm_basetemp", None)
+    if shm is not None:
+        shutil.rmtree(shm, ignore_errors=True)
 
 
 @pytest.fixture(scope="session")

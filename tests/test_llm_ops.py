@@ -519,6 +519,55 @@ def test_token_chunk_dedup_two_exchanges(spark):
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan, plan
 
 
+def _tokenizers_in_lambda_bodies(df) -> list[str]:
+    """Every ``split``/regex expression inside a lambda body of ``df``'s
+    optimized plan. A lambda re-evaluates its body per array element, so a
+    tokenizer there re-runs per element — the captured-expression trap
+    that made shingling O(tokens²) per document."""
+    def items(seq):
+        return [seq.apply(i) for i in range(seq.size())]
+
+    found = []
+
+    def walk(e, in_body):
+        name = e.getClass().getSimpleName()
+        if in_body and (
+            name in ("StringSplit", "RLike") or name.startswith("RegExp")
+        ):
+            found.append(e.toString())
+        if name == "LambdaFunction":
+            walk(e.function(), True)
+            return
+        for c in items(e.children()):
+            walk(c, in_body)
+
+    def walk_plan(p):
+        for e in items(p.expressions()):
+            walk(e, False)
+        for c in items(p.children()):
+            walk_plan(c)
+
+    walk_plan(df._jdf.queryExecution().optimizedPlan())
+    return found
+
+
+def test_no_tokenizer_inside_lambda_bodies(spark):
+    df = spark.createDataFrame(
+        [(1, "a b c d\ne f"), (2, "g h")], "doc_id int, text string"
+    )
+    plans = {
+        "minhash_signatures": dd.minhash_signatures(df, num_perms=4),
+        "repetition_metrics": tx.repetition_metrics(df),
+        "quality_score": tx.quality_score(df),
+        "c4_style_filter": tx.c4_style_filter(df),
+        "ngrams_expr": df.select(tx.ngrams_expr("text", 3)),
+        "shingles_expr": df.select(dd.shingles_expr("text", 3)),
+        "token_chunk_dedup": dd.token_chunk_dedup(df, chunk_tokens=2),
+    }
+    for name, plan in plans.items():
+        assert _tokenizers_in_lambda_bodies(plan) == [], name
+
+
 def test_incremental_minhash_matches_full_run(docs):
     # incremental (old sigs reused, new batch signed) must equal the full
     # pipeline's pairs restricted to those touching a new doc

@@ -16,7 +16,7 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -265,37 +265,58 @@ def test_repetition_metrics_bounded(spark, texts):
             assert 0.0 <= r[c] <= 1.0, (c, r[c], texts[r["doc_id"]])
 
 
+NGRAM_NS = (1, 2, 3, 5)
+
+
+def _ngrams_ref(t, n):
+    """Documented ``ngrams_expr`` semantics in plain Python: non-empty
+    whitespace tokens of lower-cased text (``str.split()``); short docs
+    yield their full token run as one gram; token-less docs no grams;
+    NULL text NULL."""
+    if t is None:
+        return None
+    toks = t.lower().split()
+    if not toks:
+        return []
+    if len(toks) < n:
+        return [" ".join(toks)]
+    return [" ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)]
+
+
+def _shingles_ref(t, n):
+    """``shingles_expr``: distinct grams in first-occurrence order, and
+    ``['']`` for a token-less or NULL document."""
+    return list(dict.fromkeys(_ngrams_ref(t, n) or [""]))
+
+
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(texts=st.lists(_TEXT, min_size=1, max_size=6))
+@given(texts=st.lists(st.one_of(st.none(), _TEXT), min_size=1, max_size=6))
+@example(texts=[
+    "", "   ", " \n\t ", None, "One", "one two", "A b C", "a b a b a b",
+    "x  y\tz\nw v u",
+])
 def test_ngrams_fast_path_matches_python_reference(spark, texts):
-    """The zip_with 2-gram fast path equals a plain Python re-implementation
-    of the documented semantics (non-empty whitespace tokens of lower-cased
-    text, i.e. Python str.split(); short docs yield their full token run as
-    one gram; token-less docs yield no grams). Also pins the n>=3 transform
-    branch against the same reference."""
+    """The shared n-gram kernel behind ``ngrams_expr`` and
+    ``shingles_expr`` equals a plain Python re-implementation of the
+    documented semantics for every n: empty, whitespace-only, NULL and
+    shorter-than-n documents included, and ``['']`` shingles for empty and
+    NULL text (so every document still gets a MinHash signature)."""
+    from pyspark_playground_spark.operators import dedup as dd
+
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
     )
     res = df.select(
         "doc_id",
-        _tx.ngrams_expr("text", 2).alias("g2"),
-        _tx.ngrams_expr("text", 3).alias("g3"),
+        *[_tx.ngrams_expr("text", n).alias(f"g{n}") for n in NGRAM_NS],
+        *[dd.shingles_expr("text", n).alias(f"s{n}") for n in NGRAM_NS],
     ).collect()
-    got2 = {r["doc_id"]: r["g2"] for r in res}
-    got3 = {r["doc_id"]: r["g3"] for r in res}
-
-    def ref(t, n):
-        toks = t.lower().split()
-        if not toks:
-            return []
-        if len(toks) < n:
-            return [" ".join(toks)]
-        return [" ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)]
-
+    got = {r["doc_id"]: r for r in res}
     for i, t in enumerate(texts):
-        assert got2[i] == ref(t, 2), (t, 2)
-        assert got3[i] == ref(t, 3), (t, 3)
+        for n in NGRAM_NS:
+            assert got[i][f"g{n}"] == _ngrams_ref(t, n), (t, n)
+            assert got[i][f"s{n}"] == _shingles_ref(t, n), (t, n)
 
 
 # ---------------------------------------------------------------------------
